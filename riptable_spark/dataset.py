@@ -350,10 +350,10 @@ class Dataset:
         return self._df.toPandas()
 
     def to_arrow(self):
-        """rt_dataset.py:3309 to_arrow (Arrow-native via Spark)."""
-        import pyarrow as pa
-
-        return pa.Table.from_pandas(self._df.toPandas())
+        """rt_dataset.py:3309 to_arrow — Spark's Arrow batches straight
+        into a pyarrow Table: a nullable bigint stays int64 (no pandas
+        float64 detour) and no pandas index metadata is attached."""
+        return self._df.toArrow()
 
     def describe(self, colname: str | None = None) -> "Dataset":
         """rt_dataset.py:6705 describe: with a column name, the statx

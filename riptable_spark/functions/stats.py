@@ -35,14 +35,10 @@ def normalize_minmax(df: DataFrame, colname: str, out_col: str | None = None) ->
 
 def winsorize(df: DataFrame, colname: str, lo: float = 0.05, hi: float = 0.95, out_col: str | None = None) -> DataFrame:
     """Clip to [p_lo, p_hi] percentiles (rt_stats.py:83)."""
+    from ..operators.groupby import percentiles
+
     out = out_col or f"{colname}_wins"
-    g = _with_global(
-        df,
-        [
-            F.percentile(F.col(colname), F.lit(lo)).alias("__plo__"),
-            F.percentile(F.col(colname), F.lit(hi)).alias("__phi__"),
-        ],
-    )
+    g = _with_global(df, percentiles(F.col(colname), [lo, hi], ["__plo__", "__phi__"]))
     return g.withColumn(
         out, F.least(F.greatest(F.col(colname), F.col("__plo__")), F.col("__phi__"))
     ).drop("__plo__", "__phi__")
@@ -80,18 +76,18 @@ def lm(df: DataFrame, y: str, x: str) -> tuple[float, float]:
 
 
 def statx(df: DataFrame, colname: str) -> DataFrame:
-    """Stats profile (rt_stats.py:40 statx): count/mean/std/min/percentiles."""
+    """Stats profile (rt_stats.py:40 statx): count/mean/std/min/percentiles
+    /max in one aggregation. The five exact percentiles share one value
+    map (``groupby.percentiles``), not one map per quantile."""
+    from ..operators.groupby import percentiles
+
     c = F.col(colname)
     return df.agg(
         F.count(c).alias("count"),
         F.avg(c).alias("mean"),
         F.stddev_samp(c).alias("std"),
         F.min(c).alias("min"),
-        F.percentile(c, F.lit(0.01)).alias("p01"),
-        F.percentile(c, F.lit(0.10)).alias("p10"),
-        F.percentile(c, F.lit(0.50)).alias("p50"),
-        F.percentile(c, F.lit(0.90)).alias("p90"),
-        F.percentile(c, F.lit(0.99)).alias("p99"),
+        *percentiles(c, [0.01, 0.10, 0.50, 0.90, 0.99], ["p01", "p10", "p50", "p90", "p99"]),
         F.max(c).alias("max"),
     )
 
@@ -1172,6 +1168,7 @@ def bootstrap_ci(
     ids = list(id_cols or [])
     idexpr = F.concat_ws("|", *[F.col(c).cast("string") for c in ids]) if ids else F.col(val_col).cast("string")
     from ..operators.dedup import _base_hash64
+    from ..operators.groupby import percentiles
 
     x = F.col(val_col).cast("long")
     b = F.explode(F.sequence(F.lit(0), F.lit(int(n_replicas) - 1))).alias("b")
@@ -1200,8 +1197,7 @@ def bootstrap_ci(
     )
     base = df.agg((F.sum(x) / F.count(F.lit(1))).alias("mean"))
     ci = means.agg(
-        F.percentile(F.col("rep_mean"), F.lit(float(lo_q))).alias("ci_lo"),
-        F.percentile(F.col("rep_mean"), F.lit(float(hi_q))).alias("ci_hi"),
+        *percentiles(F.col("rep_mean"), [lo_q, hi_q], ["ci_lo", "ci_hi"]),
         F.count(F.lit(1)).cast("long").alias("n_replicas"),
     )
     return base.crossJoin(F.broadcast(ci))

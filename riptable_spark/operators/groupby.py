@@ -80,6 +80,21 @@ def quantile(col, q, flt=None):
     return F.percentile(c, F.lit(float(q)))
 
 
+def percentiles(col, qs, names, flt=None) -> list[Column]:
+    """Several exact percentiles of ONE input as ONE aggregate buffer:
+    ``percentile(c, array(qs))[i]`` per name. Catalyst deduplicates the
+    semantically equal aggregates, so the k indexed columns share one
+    value→count map (one box per value, one exchange, one sort) instead
+    of k. Each result is exactly what ``percentile(c, q_i)`` returns —
+    the same sorted counts and interpolation per percentage. Use it
+    wherever one aggregation asks for ≥2 percentiles of the same input
+    (``plans.inspect.lint`` flags the split form as split-percentile)."""
+    if len(qs) != len(names):
+        raise ValueError(f"percentiles: {len(qs)} quantiles but {len(names)} names")
+    p = F.percentile(_maybe_filter(col, flt), F.array(*[F.lit(float(q)) for q in qs]))
+    return [p[i].alias(n) for i, n in enumerate(names)]
+
+
 def nanpercentile(col, q, flt=None):
     """rt_groupbyops.py:1938 nanpercentile — identical to ``quantile``
     (NULL/NaN-excluded like every nan-aggregate here) but takes q on the
@@ -123,10 +138,7 @@ def trimbr_exprs(col: Column, lo: float = 0.1, hi: float = 0.9):
     """GB_TRIMBR=105 trimmed mean (rt_groupbyops.py:1366) — the per-group
     [lo, hi] percentile band-edge expressions consumed by trimbr()'s first
     aggregation. Returns a 2-tuple of Columns (__trim_lo__, __trim_hi__)."""
-    return (
-        F.percentile(col, F.lit(lo)).alias("__trim_lo__"),
-        F.percentile(col, F.lit(hi)).alias("__trim_hi__"),
-    )
+    return tuple(percentiles(col, [lo, hi], ["__trim_lo__", "__trim_hi__"]))
 
 
 def trimbr(df: DataFrame, keys: list[str], valcol: str, lo: float = 0.1, hi: float = 0.9, alias: str = "trimbr") -> DataFrame:
@@ -145,7 +157,9 @@ def trimbr(df: DataFrame, keys: list[str], valcol: str, lo: float = 0.1, hi: flo
 def describe(df: DataFrame, keys: list[str], valcol: str) -> DataFrame:
     """rt_utils.py:857 describe_helper's FULL stat row — Count (all
     rows), Valid, Nans, Mean, Std, Min, P10 P25 P50 P75 P90, Max, MeanM —
-    per group. Everything except MeanM is one hash-aggregation pass;
+    per group. Everything except MeanM is one hash-aggregation pass,
+    and the five percentiles share one exact value map per group
+    (``percentiles``);
     MeanM (the reference's POSITIONAL middle-80% mean: sorted positions
     floor(.1·(n−1)) … ceil(.9·(n−1)) inclusive, rt_utils.py:906-927) adds
     one window rank over the group and is broadcast-joined back."""
@@ -159,11 +173,7 @@ def describe(df: DataFrame, keys: list[str], valcol: str) -> DataFrame:
         F.avg(c).alias("mean"),
         F.stddev_samp(c).alias("std"),
         F.min(c).alias("min"),
-        F.percentile(c, F.lit(0.10)).alias("p10"),
-        F.percentile(c, F.lit(0.25)).alias("p25"),
-        F.percentile(c, F.lit(0.50)).alias("p50"),
-        F.percentile(c, F.lit(0.75)).alias("p75"),
-        F.percentile(c, F.lit(0.90)).alias("p90"),
+        *percentiles(c, [0.10, 0.25, 0.50, 0.75, 0.90], ["p10", "p25", "p50", "p75", "p90"]),
         F.max(c).alias("max"),
     )
     nn = df.where(c.isNotNull())

@@ -314,16 +314,16 @@ def iqr_outliers(
     representable in a double — ANY evaluation order yields the same
     value, making the fences engine-identical without rounding.
 
-    Scale shape: one percentile aggregation per key (the fence relation
+    Scale shape: one percentile aggregation per key, Q1 and Q3 from one
+    shared value map (``groupby.percentiles``; the fence relation
     is group-cardinality-sized and BROADCASTS back onto the fact scan),
     then one conditional count agg — two passes total, no sort of the
     fact table.
     """
+    from .groupby import percentiles
+
     x = F.col(val_col).cast("long")
-    fences = df.groupBy(*keys).agg(
-        F.percentile(x, F.lit(0.25)).alias("q1"),
-        F.percentile(x, F.lit(0.75)).alias("q3"),
-    ).select(
+    fences = df.groupBy(*keys).agg(*percentiles(x, [0.25, 0.75], ["q1", "q3"])).select(
         *keys, "q1", "q3",
         (F.col("q1") - F.lit(float(k)) * (F.col("q3") - F.col("q1"))).alias("lo_fence"),
         (F.col("q3") + F.lit(float(k)) * (F.col("q3") - F.col("q1"))).alias("hi_fence"),

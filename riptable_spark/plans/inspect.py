@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import re
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
@@ -127,6 +128,34 @@ def _has_aggregate_below(node) -> bool:
     return False
 
 
+def _split_percentiles(node) -> list[str]:
+    """Inputs that carry ≥2 ``percentile`` aggregates in one aggregate
+    node. Each keeps its own value→count map, so k quantiles of one
+    column box, ship and sort every value k times; Spark 4 rewrites
+    ``median`` into ``percentile``, so median + percentile counts too.
+    Two percentiles share a map only with the same input, frequency,
+    direction, FILTER clause and DISTINCT flag — that is the key."""
+    try:
+        aggs = node.aggregateExpressions()
+    except Py4JError:  # Python aggregates (ArrowAggregatePython) have no such list
+        return []
+    seen: dict[tuple, list[str]] = {}
+    for i in range(aggs.size()):
+        ae = aggs.apply(i)
+        fn = ae.aggregateFunction()
+        if fn.getClass().getSimpleName() != "Percentile":
+            continue
+        key = (
+            fn.child().canonicalized().toString(),
+            fn.frequencyExpression().canonicalized().toString(),
+            bool(fn.reverse()),
+            ae.filter().toString(),
+            bool(ae.isDistinct()),
+        )
+        seen.setdefault(key, []).append(fn.child().sql())
+    return [srcs[0] for srcs in seen.values() if len(srcs) >= 2]
+
+
 def lint(df: DataFrame) -> list[str]:
     """Scale lint: walk the executed plan and flag the patterns that are
     harmless at sf0.1 and fatal at 100 TB. Returns human-readable
@@ -142,12 +171,23 @@ def lint(df: DataFrame) -> list[str]:
     - ``python-row-udf``: BatchEvalPython — row-at-a-time Python in the
       hot path (Arrow stages, which are fine, appear as
       ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas and are NOT
-      flagged).
+      flagged);
+    - ``split-percentile``: an aggregate node with ≥2 ``percentile``
+      (or median) aggregates over the same input — one value map per
+      quantile where one map serves all (``groupby.percentiles``).
     """
     warnings: list[str] = []
     for node in _walk_plan(df._jdf.queryExecution().executedPlan()):
         name = node.nodeName()
-        if name == "CartesianProduct":
+        if "Aggregate" in name:
+            for src in _split_percentiles(node):
+                w = (
+                    f"split-percentile: {name} keeps one value map per quantile of {src}; "
+                    "fuse them with operators.groupby.percentiles"
+                )
+                if w not in warnings:  # partial and final aggregate say the same
+                    warnings.append(w)
+        elif name == "CartesianProduct":
             warnings.append("cartesian-product: CartesianProduct joins every row with every row")
         elif name == "BroadcastNestedLoopJoin":
             warnings.append(

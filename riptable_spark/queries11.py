@@ -2611,7 +2611,9 @@ def q311(spark: SparkSession, sf: str) -> DataFrame:
 def q312(spark: SparkSession, sf: str) -> DataFrame:
     """Order fulfillment cycle time (order date → last shipment) per
     priority: integer day lags per order, exact interpolated
-    percentiles — the supply-chain SLA view."""
+    percentiles (one shared value map) — the supply-chain SLA view."""
+    from .operators import groupby as _gb
+
     o = load_table(spark, sf, "orders")
     li = load_table(spark, sf, "lineitem")
     per = (
@@ -2621,8 +2623,7 @@ def q312(spark: SparkSession, sf: str) -> DataFrame:
     )
     return per.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.percentile(F.col("days_to_last_ship"), F.lit(0.5)).alias("p50_days"),
-        F.percentile(F.col("days_to_last_ship"), F.lit(0.9)).alias("p90_days"),
+        *_gb.percentiles(F.col("days_to_last_ship"), [0.5, 0.9], ["p50_days", "p90_days"]),
         F.max("days_to_last_ship").cast("bigint").alias("max_days"),
     )
 

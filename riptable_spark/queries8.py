@@ -1006,15 +1006,16 @@ def q163(spark: SparkSession, sf: str) -> DataFrame:
 def q164(spark: SparkSession, sf: str) -> DataFrame:
     """nanpercentile parity (rt_groupbyops.py:1938): q on the reference's
     0-100 percentile scale, missing values excluded, exact linear
-    interpolation — one two-stage hash aggregate."""
+    interpolation — one two-stage hash aggregate whose three quantiles
+    share one value map (0-100 q scaled as nanpercentile does)."""
     from .operators import groupby as _gb
 
     li = load_table(spark, sf, "lineitem")
     q = F.col("l_quantity")
-    return li.groupBy("l_returnflag").agg(
-        F.round(_gb.nanpercentile(q, 10), 6).alias("p10"),
-        F.round(_gb.nanpercentile(q, 50), 6).alias("p50"),
-        F.round(_gb.nanpercentile(q, 99), 6).alias("p99"),
+    names = ["p10", "p50", "p99"]
+    ps = _gb.percentiles(q, [p / 100.0 for p in (10, 50, 99)], [f"__{n}__" for n in names])
+    return li.groupBy("l_returnflag").agg(*ps).select(
+        "l_returnflag", *[F.round(f"__{n}__", 6).alias(n) for n in names]
     )
 
 

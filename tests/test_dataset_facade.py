@@ -267,3 +267,16 @@ def test_describe_all_numeric_columns(spark):
     assert by_stat["Count"].a == 10.0 and by_stat["Valid"].b == 10.0
     assert by_stat["Mean"].a == 5.5 and by_stat["Mean"].b == 11.0
     assert by_stat["Min"].a == 1.0 and by_stat["Max"].b == 20.0
+
+
+def test_to_arrow_keeps_nullable_bigint(spark):
+    """to_arrow goes Spark → Arrow directly: a bigint column with a NULL
+    stays int64 with its NULL (no pandas float64 detour) and the table
+    carries no pandas index metadata."""
+    import pyarrow as pa
+
+    t = Dataset(spark.createDataFrame([(1, 2.5), (None, 3.5), (3, None)], "x bigint, y double")).to_arrow()
+    assert t.schema.field("x").type == pa.int64()
+    assert t.column("x").to_pylist() == [1, None, 3]
+    assert t.column("y").to_pylist() == [2.5, 3.5, None]
+    assert b"pandas" not in (t.schema.metadata or {})

@@ -30,6 +30,33 @@ def test_flags_python_row_udf(spark):
     assert any("python-row-udf" in w for w in warns)
 
 
+def test_flags_split_percentile(spark):
+    df = spark.range(100).agg(
+        F.percentile("id", F.lit(0.1)).alias("p10"), F.percentile("id", F.lit(0.9)).alias("p90")
+    )
+    warns = pi.lint(df)
+    assert any(w.startswith("split-percentile") for w in warns), warns
+
+
+def test_fused_percentiles_clean(spark):
+    from riptable_spark.operators import groupby as gb
+
+    df = spark.range(100).withColumn("g", F.col("id") % 3)
+    fused = df.groupBy("g").agg(*gb.percentiles(F.col("id"), [0.1, 0.5, 0.9], ["p10", "p50", "p90"]))
+    assert pi.lint(fused) == []
+    # one percentile per input column is not a split
+    per_col = df.agg(F.percentile("id", F.lit(0.5)), F.percentile("g", F.lit(0.5)))
+    assert pi.lint(per_col) == []
+
+
+def test_flags_median_plus_percentile(spark):
+    """Spark 4 rewrites median into percentile(x, 0.5): median and a
+    percentile over one column are two value maps too."""
+    df = spark.range(100).agg(F.median("id").alias("m"), F.percentile("id", F.lit(0.9)).alias("p90"))
+    warns = pi.lint(df)
+    assert any(w.startswith("split-percentile") for w in warns), warns
+
+
 def test_clean_on_keyed_window_and_pandas(spark):
     df = spark.range(100).withColumn("g", F.col("id") % 5)
     keyed = df.withColumn("r", F.row_number().over(Window.partitionBy("g").orderBy("id")))
