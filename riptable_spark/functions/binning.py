@@ -54,13 +54,10 @@ def qcut(df: DataFrame, colname: str, q: int) -> DataFrame:
     """rt_bin.py:155 — quantile binning. One percentile aggregation
     (q+1 scalars to the driver), then a codegen CASE; no per-row Python."""
     probs = [i / q for i in range(q + 1)]
-    edges_row = df.agg(
-        F.percentile(F.col(colname), F.array(*[F.lit(p) for p in probs])).alias("edges")
-    ).collect()[0]
     # skewed data collapses percentile edges; dedupe so tied quantiles
     # merge into one bin (pandas duplicates='drop') instead of routing
     # every tied value into the last matching bin with empty bins before
-    edges = sorted(dict.fromkeys(edges_row["edges"]))
+    edges = sorted(dict.fromkeys(quantile_edges(df, colname, probs)))
     if len(edges) == 1:  # constant column → one all-inclusive bin
         edges = edges * 2
     return df.withColumn(f"{colname}_bin", cut(F.col(colname), edges))

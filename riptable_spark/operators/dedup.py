@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph
+
 # Mersenne prime 2^31-1 for the universal-hash family used by MinHash:
 # with h, a, b < p the product h*a fits in int64 (< 2^62), so the math is
 # exact under Spark ANSI mode — no overflow, no UDF.
@@ -450,16 +452,7 @@ def ngram_jaccard_pairs(
     return inter.select("id_a", "id_b", jac.alias("jaccard")).where(F.col("jaccard") >= threshold)
 
 
-def _cc_small_edges() -> int:
-    """Union-find crossover ($SPARK_GRAFT_CC_SMALL_EDGES, default 500k —
-    the measured local[32] crossover; read at call time so deployments
-    tune it without code changes; malformed values fall back)."""
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CC_SMALL_EDGES", "500000"))
-    except ValueError:
-        return 500_000
+_CC_SMALL_EDGES = 500_000  # connected_components' union-find crossover (SCALE.md)
 
 
 def connected_components(
@@ -492,14 +485,13 @@ def connected_components(
     the sum (q605 runs its full and hub-pruned variants together).
     """
     g = list(group_cols or [])
-    edges = (
+    # edges drive 3 jobs per round (checkpoint, change count, next
+    # join) — materialize ONCE or the whole upstream pair pipeline
+    # (LSH, windows, …) re-executes every round
+    edges = graph.checkpoint(
         pairs.select(*g, F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(*g, F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        # edges drive 3 jobs per round (checkpoint, change count, next
-        # join) — materialize ONCE or the whole upstream pair pipeline
-        # (LSH, windows, …) re-executes every round
-        .localCheckpoint(eager=True)
     )
     # The edges are materialized, so ONE cheap count picks the mode.
     # Small graphs (the measured ≤500k-edge regime where every round's
@@ -511,13 +503,10 @@ def connected_components(
     # 8.5 s → 2.6 s, q605 percolation 7.9 s → 2.0 s at sf0.1.  Big
     # graphs keep the shuffle-join loop that scales to billions of
     # edges (the 100 TB path; 600k-node worst-case chain measured in
-    # SCALE.md).  The crossover is a deployment dial
-    # ($SPARK_GRAFT_CC_SMALL_EDGES, default 500k = the local[32]
-    # measurement): it trades rounds x fixed job overhead against one
-    # task holding the edge set in memory (~50 B/edge in the dict), so
-    # raise it on clusters with slow job scheduling / ample executor
-    # memory and lower it where a single-task edge pull would straggle.
-    small = edges.count() <= _cc_small_edges()
+    # SCALE.md).  The crossover (_CC_SMALL_EDGES) trades rounds x fixed
+    # job overhead against one task holding the edge set in memory
+    # (~50 B/edge in the dict).
+    small = edges.count() <= _CC_SMALL_EDGES
     if small:
         from pyspark.sql.types import StructField, StructType
 
@@ -578,7 +567,8 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         # neighbor labels: for each node, the min label among neighbors
         nbr = (
             edges.join(labels.withColumnRenamed("node", "dst"), on=[*g, "dst"])
@@ -622,22 +612,21 @@ def connected_components(
         jump = new_labels.select(
             *g, F.col("node").alias("component"), F.col("component").alias("__jump__")
         )
-        new_labels = new_labels.join(jump, on=[*g, "component"], how="left").select(
+        return new_labels.join(jump, on=[*g, "component"], how="left").select(
             *g,
             "node",
             F.coalesce(F.col("__jump__"), F.col("component")).alias("component"),
         )
-        new_labels = new_labels.localCheckpoint(eager=True)  # truncate lineage per round
+
+    def unchanged(old: DataFrame, new: DataFrame) -> bool:
         changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on=[*g, "node"])
+            new.alias("n")
+            .join(old.alias("o"), on=[*g, "node"])
             .where(F.col("n.component") != F.col("o.component"))
-            .count()
         )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+        return changed.count() == 0
+
+    return graph.fixpoint(labels, propagate, max_iter, unchanged)
 
 
 def k_core(
@@ -665,18 +654,11 @@ def k_core(
     removes nothing.
 
     Scale shape: each round is one degree aggregation plus two
-    semi-joins, with the surviving edge relation
-    ``localCheckpoint(eager=True)``-ed per round (the iterative-operator
-    discipline — persist does not truncate lineage)."""
-    e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rows = []
-    for r in range(1, max_rounds + 1):
+    semi-joins, with the surviving edge relation checkpointed per round
+    (:func:`graph.rounds`)."""
+    e = graph.checkpoint(graph.undirected_edges(pairs, id_a, id_b))
+
+    def peel(e: DataFrame) -> DataFrame:
         deg = (
             e.select(F.col("u").alias("node"))
             .unionByName(e.select(F.col("v").alias("node")))
@@ -684,29 +666,27 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("__d__"))
         )
         keep = deg.where(F.col("__d__") >= k).select("node")
-        e = (
+        return (
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
         )
-        if not return_edges:
-            # LAZY curve row over the round's already-materialized edge
-            # relation: every edge contributes its two endpoints to the
-            # union, so n_edges = count/2 exactly and n_nodes is one
-            # countDistinct — the whole curve is ONE deferred job at
-            # sink time instead of 2 eager driver count() jobs per
-            # round (round-6 job-count cut; results identical).
-            ends = e.select(F.col("u").alias("n")).unionByName(
-                e.select(F.col("v").alias("n"))
-            )
-            rows.append(
-                ends.agg(
-                    F.count_distinct(F.col("n")).cast("long").alias("n_nodes"),
-                    (F.count(F.lit(1)).cast("long") / F.lit(2)).cast("long").alias("n_edges"),
-                ).select(F.lit(r).cast("long").alias("round"), "n_nodes", "n_edges")
-            )
+
     if return_edges:
-        return e
+        return graph.fixpoint(e, peel, max_rounds)
+    # LAZY curve row over each round's already-materialized edge
+    # relation: every edge contributes its two endpoints to the union,
+    # so n_edges = count/2 exactly and n_nodes is one countDistinct —
+    # the whole curve is ONE deferred job at sink time instead of 2
+    # eager driver count() jobs per round (round-6 job-count cut).
+    rows = []
+    for r, e in enumerate(graph.rounds(e, peel, max_rounds), start=1):
+        ends = e.select(F.col("u").alias("n")).unionByName(e.select(F.col("v").alias("n")))
+        rows.append(
+            ends.agg(
+                F.count_distinct(F.col("n")).cast("long").alias("n_nodes"),
+                (F.count(F.lit(1)).cast("long") / F.lit(2)).cast("long").alias("n_edges"),
+            ).select(F.lit(r).cast("long").alias("round"), "n_nodes", "n_edges")
+        )
     if not rows:  # max_rounds=0: same empty relation the literal form returned
         return pairs.sparkSession.createDataFrame(
             [], "round bigint, n_nodes bigint, n_edges bigint"
@@ -734,40 +714,30 @@ def k_truss(
 
     Scale shape: triangles enumerate via the standard oriented
     two-path + closing-edge equi-join on (u<v)-directed edges (each
-    triangle counted once); support is one union + hash agg; the edge
-    relation is localCheckpoint(eager=True)-ed per round."""
-    e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    triangle counted once); support is one union + hash agg; the
+    support and edge relations are checkpointed per round (two states,
+    so the loop is not :func:`graph.rounds`)."""
+    e = graph.checkpoint(graph.undirected_edges(pairs, id_a, id_b))
     rows = []
     for r in range(1, max_rounds + 1):
-        ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-        ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-        tri = ab.join(bc, "b").join(ac, ["a", "c"])
+        tri = graph.triangles(e)
         # materialize SUPPORT once: the triangle join runs exactly one
         # time per round (it previously ran twice — once for the eager
         # n_tri count(), once inside the peel), and Σsupport = 3·n_tri
         # exactly (each triangle contributes to 3 edges), so the curve
         # reads n_triangles off the tiny checkpointed support relation
         # lazily at sink time (round-6 job-count cut; results identical).
-        sup = (
+        sup = graph.checkpoint(
             tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
             .unionByName(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
             .unionByName(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
             .groupBy("u", "v")
             .agg(F.count(F.lit(1)).alias("__sup__"))
-            .localCheckpoint(eager=True)
         )
-        e = (
+        e = graph.checkpoint(
             e.join(sup, ["u", "v"], "left")
             .where(F.coalesce(F.col("__sup__"), F.lit(0)) >= k - 2)
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
         n_tri = F.coalesce(F.sum("__sup__"), F.lit(0)).cast("long") / F.lit(3)
         rows.append(
@@ -1528,20 +1498,18 @@ def label_propagation(
     on bipartite subgraphs, so a bounded round count IS the algorithm.
     Returns (node, label) after ``n_iter`` rounds.
     """
-    edges = (
+    # materialize the edge relation once: n_iter rounds otherwise re-run
+    # the upstream pair pipeline per round
+    edges = graph.checkpoint(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        # iterative-operator discipline (SCALE.md): materialize the edge
-        # relation once — n_iter rounds otherwise re-run the upstream
-        # pair pipeline per round — and truncate the label lineage per
-        # round so plan size (and Catalyst time) stays constant.
-        .localCheckpoint(eager=True)
     )
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    for _ in range(n_iter):
+
+    def vote(labels: DataFrame) -> DataFrame:
         nbr = (
             edges.join(
                 labels.select(F.col("node").alias("dst"), "label"), on="dst"
@@ -1549,7 +1517,7 @@ def label_propagation(
             .groupBy("src", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
+        return (
             nbr.groupBy("src")
             .agg(
                 F.min_by(
@@ -1558,9 +1526,9 @@ def label_propagation(
                 ).alias("label")
             )
             .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=True)
         )
-    return labels
+
+    return graph.fixpoint(labels, vote, n_iter)
 
 
 def snm_pairs(
@@ -1681,7 +1649,9 @@ def bellman_ford(
 
     Each round is one equi-join (edges ⋈ current distances on the
     source endpoint) + one min-aggregation — integer weights make every
-    distance an exact BIGINT.  Seeds come from ``sources`` (node ids at
+    distance an exact BIGINT.  The distances are checkpointed per round
+    (:func:`graph.fixpoint`): they feed both the join and the union, so
+    an uncut plan doubles with every round.  Seeds come from ``sources`` (node ids at
     distance 0).  Returns (node, dist, settled_hops≤n_rounds) for every
     reached node.
     """
@@ -1692,16 +1662,15 @@ def bellman_ford(
         F.col(src_col).alias("es"), F.col(dst_col).alias("ed"),
         F.col(weight_col).cast("long").alias("w"),
     )
-    for _ in range(n_rounds):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = (
             e.join(dist.select(F.col("n").alias("es"), "d"), on="es")
             .select(F.col("ed").alias("n"), (F.col("d") + F.col("w")).alias("d"))
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("n")
-            .agg(F.min("d").alias("d"))
-        )
+        return dist.unionByName(relaxed).groupBy("n").agg(F.min("d").alias("d"))
+
+    dist = graph.fixpoint(dist, relax, n_rounds)
     return dist.select(F.col("n").alias(node_col), F.col("d").alias("dist"))
 
 

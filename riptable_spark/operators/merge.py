@@ -28,6 +28,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph
+
 
 def _normalize_on(on, left_on, right_on) -> tuple[list[str], list[str]]:
     if on is not None:
@@ -559,17 +561,38 @@ def pagerank(
     web-corpus curation pipeline attaches to crawled documents). Nodes =
     distinct endpoints; dangling nodes keep the teleport term only.
 
-    Each iteration is ONE join (ranks ⋈ out-degree-normalized edges,
-    both keyed on src) + ONE aggregation on dst — the standard
-    distributed shape; out-degrees are computed once and the edge
-    relation is reused every round (cache it at scale). Rank mass:
-    r' = (1−d)/N + d·Σ_in r/outdeg."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    nodes = edges.select(src.alias("node")).union(edges.select(dst.alias("node"))).distinct()
-    n_nodes = nodes.count()
+    Rank mass: r' = (1−d)/N + d·Σ_in r/outdeg, from the uniform vector;
+    the distributed shape is :func:`_walk`'s."""
+    n_nodes = graph.node_set(edges, src_col, dst_col).count()
+    return _walk(
+        edges, F.lit(1.0 / n_nodes), F.lit((1.0 - damping) / n_nodes),
+        n_iter, damping, src_col, dst_col,
+    )
+
+
+def _walk(
+    edges: DataFrame,
+    init: Column,
+    teleport: Column,
+    n_iter: int,
+    damping: float,
+    src_col: str,
+    dst_col: str,
+) -> DataFrame:
+    """The random walk behind :func:`pagerank` and
+    :func:`personalized_pagerank`: ranks start at ``init`` and each
+    round r' = teleport + d·Σ_in r/outdeg.
+
+    Each round is ONE join (ranks ⋈ out-degree-normalized edges, both
+    keyed on src) + ONE aggregation on dst — the standard distributed
+    shape; out-degrees are computed once and the edge relation is
+    reused every round (cache it at scale). Bounded ``n_iter`` rounds
+    ARE the algorithm, as for bellman_ford."""
+    dst = F.col(dst_col)
+    nodes = graph.node_set(edges, src_col, dst_col)
     deg = edges.groupBy(src_col).agg(F.count(F.lit(1)).alias("__deg__"))
     e = edges.join(deg, on=src_col)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
+    ranks = nodes.withColumn("rank", init)
     for _ in range(n_iter):
         contrib = (
             e.join(ranks.withColumnRenamed("node", src_col), on=src_col)
@@ -579,45 +602,16 @@ def pagerank(
         )
         ranks = nodes.join(contrib, on="node", how="left").select(
             "node",
-            (F.lit((1.0 - damping) / n_nodes)
-             + F.lit(damping) * F.coalesce(F.col("__in__"), F.lit(0.0))).alias("rank"),
+            (teleport + F.lit(damping) * F.coalesce(F.col("__in__"), F.lit(0.0))).alias("rank"),
         )
     return ranks
-
-
-def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
-    """Triangle counting over an undirected edge list (graph-quality /
-    community-structure metric for link corpora): canonicalize each edge
-    to (lo, hi), dedup, then the standard two-join enumeration a<b<c —
-    every triangle counted exactly once, every join an equi-join (no
-    cartesian). Returns a 1-row (n_triangles). The a<b<c ordering is the
-    skew/duplication guard: without it each triangle appears 6×."""
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    e1 = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-    e2 = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    e3 = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-    return (
-        e1.join(e2, "b")
-        .join(e3, ["a", "c"])
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
 
 
 def degree_stats(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """Per-node undirected degree (deduped edges, both endpoints): the
     basic link-graph profile. One explode-shaped union + one count."""
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    nodes = e.select(F.col("lo").alias("node")).unionAll(e.select(F.col("hi").alias("node")))
+    e = graph.undirected_edges(edges, src_col, dst_col)
+    nodes = e.select(F.col("u").alias("node")).unionAll(e.select(F.col("v").alias("node")))
     return nodes.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("degree"))
 
 
@@ -638,19 +632,13 @@ def hits(
     back.  Nodes with no in-links (resp. out-links) hold authority
     (resp. hub) 0.  Returns (node, hub, authority)."""
     src, dst = F.col(src_col), F.col(dst_col)
-    # iterative-operator discipline (SCALE.md): materialize the edge and
-    # node relations once and truncate the score lineage per half-step —
-    # without this the final plan nests every previous half-step (hub's
-    # tree contains auth's, which contains the previous hub's, …), so
-    # Catalyst re-optimizes an exponentially growing tree and the
-    # duplicated subtrees re-execute wherever exchange reuse misses.
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(src.alias("node"))
-        .union(edges.select(dst.alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # materialize the edge and node relations once and checkpoint each
+    # half-step: hub's plan contains auth's, which contains the previous
+    # hub's, so without the cut the tree grows with every half-step. Two
+    # states per round, so the loop stays here rather than on
+    # graph.fixpoint.
+    edges = graph.checkpoint(edges)
+    nodes = graph.checkpoint(graph.node_set(edges, src_col, dst_col))
     hub = nodes.withColumn("hub", F.lit(1.0))
     auth = None
     for _ in range(n_iter):
@@ -660,11 +648,10 @@ def hits(
             .agg(F.sum("hub").alias("__a__"))
         )
         a_tot = a_raw.agg(F.sum("__a__").alias("__t__"))
-        auth = (
+        auth = graph.checkpoint(
             nodes.join(a_raw, on="node", how="left")
             .crossJoin(F.broadcast(a_tot))
             .select("node", (F.coalesce(F.col("__a__"), F.lit(0.0)) / F.col("__t__")).alias("authority"))
-            .localCheckpoint(eager=True)
         )
         h_raw = (
             edges.join(auth.withColumnRenamed("node", dst_col), on=dst_col)
@@ -672,11 +659,10 @@ def hits(
             .agg(F.sum("authority").alias("__h__"))
         )
         h_tot = h_raw.agg(F.sum("__h__").alias("__t__"))
-        hub = (
+        hub = graph.checkpoint(
             nodes.join(h_raw, on="node", how="left")
             .crossJoin(F.broadcast(h_tot))
             .select("node", (F.coalesce(F.col("__h__"), F.lit(0.0)) / F.col("__t__")).alias("hub"))
-            .localCheckpoint(eager=True)
         )
     return nodes.join(hub, on="node", how="left").join(auth, on="node", how="left")
 
@@ -837,12 +823,7 @@ def link_predict(
     jaccard = cn / (deg_lo + deg_hi − cn) — exact int64 operands, one
     IEEE divide, so a SQL oracle replays it bit-for-bit.
     """
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
+    e = graph.undirected_edges(edges, src_col, dst_col).toDF("lo", "hi")
     # node → neighbor adjacency (both directions)
     adj = e.select(F.col("lo").alias("node"), F.col("hi").alias("nbr")).unionAll(
         e.select(F.col("hi").alias("node"), F.col("lo").alias("nbr"))
@@ -902,12 +883,7 @@ def graph_modularity(
     Returns one row per community (e_c, d_c, contribution numerator)
     plus the scalar Q attached to every row for convenience.
     """
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
+    e = graph.undirected_edges(edges, src_col, dst_col).toDF("lo", "hi")
     lab = labels.select(F.col(node_col).alias("__n__"), F.col(community_col).alias("__c__"))
     tagged = (
         e.join(F.broadcast(lab.withColumnRenamed("__n__", "lo").withColumnRenamed("__c__", "c_lo")), on="lo")
@@ -943,6 +919,32 @@ def graph_modularity(
     )
 
 
+def _path_doubling(pairs: DataFrame, max_rounds: int) -> DataFrame:
+    """Transitive closure of the pair relation (s, d) by path doubling:
+    R ← R ∪ (R ∘ R) squares the reachable path length every round, so
+    ``max_rounds`` rounds cover paths up to 2^max_rounds long — the
+    log-depth alternative to one-step-per-level iteration (and to a
+    recursive CTE, which Spark lacks).  Each round is one equi-join of
+    the relation with itself on the meet node plus a distinct; the
+    rounds stop early once one adds no pair (R is then closed).  The
+    per-round checkpoint is what keeps plan time flat: q569's 60-node
+    graph spent 25 s re-optimizing the nested doubling plan without it,
+    ~3 s with it.  The starting relation is checkpointed too, so the
+    first round's count does not re-run the plan that built it."""
+
+    def double(r: DataFrame) -> DataFrame:
+        step = (
+            r.alias("a")
+            .join(r.alias("b"), F.col("a.d") == F.col("b.s"))
+            .select(F.col("a.s").alias("s"), F.col("b.d").alias("d"))
+        )
+        return r.unionByName(step).distinct()
+
+    return graph.fixpoint(
+        graph.checkpoint(pairs), double, max_rounds, graph.same_row_count()
+    )
+
+
 def tree_closure(
     edges: DataFrame,
     node_col: str = "node",
@@ -950,43 +952,22 @@ def tree_closure(
     max_rounds: int = 6,
 ) -> DataFrame:
     """All (node, ancestor) pairs of a forest, INCLUDING (node, node),
-    by path doubling: R ← R ∪ (R ∘ R) squares the reachable path length
-    every round, so ``max_rounds`` of 6 covers depth 2⁶ = 64 with six
-    self-joins — the log-depth alternative to one-step-per-level
-    iteration (and to a recursive CTE, which Spark lacks).
+    by :func:`_path_doubling`: ``max_rounds`` of 6 covers depth 2⁶ = 64
+    with six self-joins.
 
-    Each round is one equi-join of the pair relation with itself keyed
-    on the meet node plus a distinct; the relation size is
-    O(nodes · depth) — at 100 TB of fact rows the DIMENSION tree this
-    runs on is small, and the closure is what makes hierarchy rollups a
-    plain broadcast join downstream.
+    The relation size is O(nodes · depth) — at 100 TB of fact rows the
+    DIMENSION tree this runs on is small, and the closure is what makes
+    hierarchy rollups a plain broadcast join downstream.
     """
     base = edges.select(
-        F.col(node_col).alias("node"), F.col(parent_col).alias("anc")
-    ).where(F.col("anc").isNotNull())
+        F.col(node_col).alias("s"), F.col(parent_col).alias("d")
+    ).where(F.col("d").isNotNull())
     self_pairs = (
-        edges.select(F.col(node_col).alias("node"))
-        .unionAll(edges.select(F.col(parent_col).alias("node")))
+        graph.node_set(edges, node_col, parent_col)
         .where(F.col("node").isNotNull())
-        .distinct()
-        .withColumn("anc", F.col("node"))
+        .select(F.col("node").alias("s"), F.col("node").alias("d"))
     )
-    closure = base.unionAll(self_pairs).distinct()
-    for _ in range(max_rounds):
-        ext = (
-            closure.alias("a")
-            .join(
-                closure.alias("b"),
-                F.col("a.anc") == F.col("b.node"),
-            )
-            .select(F.col("a.node").alias("node"), F.col("b.anc").alias("anc"))
-        )
-        new_closure = closure.unionAll(ext).distinct().localCheckpoint(eager=True)
-        if new_closure.count() == closure.count():
-            closure = new_closure
-            break
-        closure = new_closure
-    return closure
+    return _path_doubling(base.unionByName(self_pairs).distinct(), max_rounds).toDF("node", "anc")
 
 
 def tree_rollup(
@@ -1016,55 +997,6 @@ def tree_rollup(
         F.sum("__v__").cast("long").alias("subtree_sum"),
         F.count(F.lit(1)).cast("long").alias("subtree_count"),
     )
-
-
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """The k-core of an undirected graph: the maximal subgraph where
-    every node has degree ≥ k — the standard peel for separating a
-    dense interaction core from tendrils (spam rings, power users).
-
-    Iterative peeling: each round computes degrees (one agg over the
-    surviving symmetric edge list) and drops nodes below k; converges
-    when no node is dropped (the fixpoint is order-independent, so the
-    result is deterministic regardless of partitioning).  Rounds are
-    bounded by ``max_iter``; each is one shuffle + two semi-joins, with
-    lineage truncated per round like connected_components.
-
-    Returns (node, degree) of the surviving core (empty if none).
-    """
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    for _ in range(max_iter):
-        sym = e.select(F.col("lo").alias("node")).unionAll(
-            e.select(F.col("hi").alias("node"))
-        )
-        deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.where(F.col("degree") >= k).select("node")
-        new_e = (
-            e.join(keep.withColumnRenamed("node", "lo"), on="lo", how="left_semi")
-            .join(keep.withColumnRenamed("node", "hi"), on="hi", how="left_semi")
-        )
-        new_e = new_e.localCheckpoint(eager=True)
-        old_n, new_n = e.count(), new_e.count()
-        e = new_e
-        if new_n == old_n:
-            break
-    sym = e.select(F.col("lo").alias("node")).unionAll(
-        e.select(F.col("hi").alias("node"))
-    )
-    return sym.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    ).where(F.col("degree") >= k)
 
 
 def scd2_build(
@@ -1171,36 +1103,17 @@ def personalized_pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
 ) -> DataFrame:
-    """Personalized PageRank: identical distributed shape to
-    :func:`pagerank` (one join + one dst-aggregation per round, edge
-    relation and out-degrees computed once), but ALL teleport mass
-    returns to the ``seed`` node — r' = (1−d)·1[node=seed] + d·Σ_in
+    """Personalized PageRank: :func:`pagerank`'s walk, but ALL teleport
+    mass returns to the ``seed`` node — r' = (1−d)·1[node=seed] + d·Σ_in
     r/outdeg, started from the indicator vector.  The resulting scores
     rank nodes by proximity to the seed: the item-to-item /
     account-neighborhood recommendation primitive at graph scale.
     Bounded ``n_iter`` rounds ARE the algorithm (the k-hop
-    neighborhood), same as bellman_ford/pagerank."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    nodes = edges.select(src.alias("node")).union(edges.select(dst.alias("node"))).distinct()
-    deg = edges.groupBy(src_col).agg(F.count(F.lit(1)).alias("__deg__"))
-    e = edges.join(deg, on=src_col)
+    neighborhood)."""
     seed_ind = F.when(F.col("node") == seed, F.lit(1.0)).otherwise(F.lit(0.0))
-    ranks = nodes.withColumn("rank", seed_ind)
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", src_col), on=src_col)
-            .select(dst.alias("node"), (F.col("rank") / F.col("__deg__")).alias("__c__"))
-            .groupBy("node")
-            .agg(F.sum("__c__").alias("__in__"))
-        )
-        ranks = nodes.join(contrib, on="node", how="left").select(
-            "node",
-            (
-                F.lit(1.0 - damping) * seed_ind
-                + F.lit(damping) * F.coalesce(F.col("__in__"), F.lit(0.0))
-            ).alias("rank"),
-        )
-    return ranks
+    return _walk(
+        edges, seed_ind, F.lit(1.0 - damping) * seed_ind, n_iter, damping, src_col, dst_col
+    )
 
 
 def scc_components(
@@ -1210,9 +1123,8 @@ def scc_components(
     max_doubling: int = 6,
 ) -> DataFrame:
     """Strongly connected components of a directed graph via transitive
-    closure: path-doubling (R ← R ∪ R∘R, each round DOUBLES the
-    reachable path length, so ``max_doubling`` rounds cover paths up to
-    2^rounds) then mutual reachability u→*v ∧ v→*u; each node's
+    closure (:func:`_path_doubling`: ``max_doubling`` rounds cover paths
+    up to 2^rounds) then mutual reachability u→*v ∧ v→*u; each node's
     component is the smallest mutually-reachable node id (itself
     included, so acyclic nodes form singletons).
 
@@ -1223,22 +1135,10 @@ def scc_components(
     identical.  Returns (node, component).
     """
     e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).distinct()
-    r = e
-    for _ in range(max_doubling):
-        step = (
-            r.alias("a")
-            .join(r.alias("b"), F.col("a.d") == F.col("b.s"))
-            .select(F.col("a.s").alias("s"), F.col("b.d").alias("d"))
-        )
-        # localCheckpoint, not persist: persist keeps the full logical
-        # lineage, so every doubling round re-optimizes an exponentially
-        # growing plan (plan time dominated the 60-node q569 at 25 s;
-        # ~3 s after truncation). On a cluster use a reliable
-        # checkpoint dir instead.
-        r = r.unionByName(step).distinct().localCheckpoint(eager=True)
+    r = _path_doubling(e, max_doubling)
     rev = r.select(F.col("d").alias("s"), F.col("s").alias("d"))
     mutual = r.intersect(rev)
-    nodes = e.select(F.col("s").alias("node")).union(e.select(F.col("d").alias("node"))).distinct()
+    nodes = graph.node_set(e, "s", "d")
     pairs = mutual.select(F.col("s").alias("node"), F.col("d").alias("peer")).unionByName(
         nodes.select("node", F.col("node").alias("peer"))
     )

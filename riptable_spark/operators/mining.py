@@ -11,6 +11,7 @@ conversions and one divide, so a SQL oracle replays it bit-for-bit.
 
 from __future__ import annotations
 
+from . import graph
 from .apply import grouped_apply
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,30 +75,23 @@ def basket_pairs(
 def triangle_count(edges: DataFrame, src: str = "item_a", dst: str = "item_b") -> DataFrame:
     """Global triangle count over an undirected edge list — the classic
     graph-cohesion metric (community density, spam-graph detection).
+    Returns one row (n_edges, n_triangles).
 
-    Requires/enforces the canonical ``a < b`` orientation, then counts
-    paths a<b<c closed by (a,c): two equi-joins, never a cross join.
-    This is the standard distributed formulation — each triangle is
-    counted exactly once because orientation fixes the traversal order.
-    At scale the join keys are the vertex ids; a degree cap on the
-    input edge list (cf. ``basket_pairs(max_basket=...)``) bounds the
-    wedge explosion the same way it bounds pair generation.
+    Enumerates :func:`graph.triangles` over :func:`graph.undirected_edges`
+    (each triangle once, two equi-joins).  At scale the join keys are
+    the vertex ids; a degree cap on the input edge list (cf.
+    ``basket_pairs(max_basket=...)``) bounds the wedge explosion the
+    same way it bounds pair generation.
+
+    The edge relation fans out FOUR ways (ab/bc/ac/n_edges), so it is
+    materialized ONCE, while the plan is built (:func:`graph.checkpoint`,
+    which notes the cluster caveat): calling this runs a Spark job over
+    the whole upstream lineage even if the result is never read, and
+    every consumer reads the checkpoint instead of re-running the
+    upstream pair pipeline (q263: ~5 lineitem scans -> 1).
     """
-    e = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b")
-    ).where(F.col("a") != F.col("b")).distinct()
-    # e fans out FOUR ways (ab/bc/ac/n_edges): materialize the (small —
-    # post-support-filter pair) relation once, or every consumer re-runs
-    # the entire upstream pair pipeline (q263: ~5 lineitem scans -> 1)
-    e = e.localCheckpoint(eager=True)
-    ab = e.select(F.col("a"), F.col("b"))
-    bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    ac = e.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
-    wedges = ab.join(bc, on="b")
-    tri = wedges.join(
-        ac, (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2"))
-    )
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles")).crossJoin(
+    e = graph.checkpoint(graph.undirected_edges(edges, src, dst))
+    return graph.triangles(e).agg(F.count(F.lit(1)).alias("n_triangles")).crossJoin(
         F.broadcast(e.agg(F.count(F.lit(1)).alias("n_edges")))
     ).select("n_edges", "n_triangles")
 
@@ -679,13 +673,8 @@ def degree_assortativity(
     and r is a fixed tree with one sqrt.  Two hash aggs + one edge
     join.  Returns (n_edges, n_nodes, assortativity).
     """
-    e = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-    ).where(F.col("a") != F.col("b")).distinct()
-    both = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    e = graph.undirected_edges(edges, src_col, dst_col)
+    both = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
     j = (
         both.join(deg.select(F.col("u"), F.col("d").alias("du")), on="u")
@@ -783,13 +772,8 @@ def clustering_coefficient(
     (node, degree, n_triangles, clustering); degree-<2 nodes get
     clustering NULL.
     """
-    e = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-    ).where(F.col("a") != F.col("b")).distinct()
-    both = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    e = graph.undirected_edges(edges, src_col, dst_col)
+    both = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("degree"))
     work = e
     capped = None
@@ -797,15 +781,11 @@ def clustering_coefficient(
         hubs = deg.where(F.col("degree") > int(max_degree)).select(F.col("u").alias("__hub__"))
         capped = hubs
         work = (
-            e.join(F.broadcast(hubs), e.a == F.col("__hub__"), "left_anti")
-            .join(F.broadcast(hubs), e.b == F.col("__hub__"), "left_anti")
+            e.join(F.broadcast(hubs), e.u == F.col("__hub__"), "left_anti")
+            .join(F.broadcast(hubs), e.v == F.col("__hub__"), "left_anti")
         )
-    e1 = work.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = work.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = work.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tri = e1.join(e2, on="y").join(e3, on=["x", "z"])
     tn = (
-        tri.select(F.explode(F.array("x", "y", "z")).alias("u"))
+        graph.triangles(work).select(F.explode(F.array("a", "b", "c")).alias("u"))
         .groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )

@@ -46,7 +46,8 @@ def _cosine_pair_udf():
     zip_with parity: unequal-length or null inputs score NaN, which
     fails any ``>= threshold`` exactly like the null the column
     expression produced (one documented edge shared with the q108/q168
-    scorers: a zero norm yields NaN-drop where ANSI division raised)."""
+    scorers: a zero norm yields NaN-drop where the column expression's
+    ANSI double division raises DIVIDE_BY_ZERO)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -406,9 +407,11 @@ def pairwise_cosine(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str 
     cos_sim by the same ascending-fold/0.0-seed argument, and the
     O(n²) interpreted HOF folds of the self-join become blocked numpy
     matmuls.  One documented domain edge inherited from the scorer:
-    zero-norm vectors DROP (IEEE NaN ≥ thr is false) where the ANSI
-    join path raised DIVIDE_BY_ZERO — no declared query carries zero
-    vectors (tests pin it)."""
+    zero-norm vectors DROP (IEEE NaN ≥ thr is false) where the join
+    path raises DIVIDE_BY_ZERO — ANSI mode raises on a zero DOUBLE
+    divisor too (checked on Spark 4.1.2 with a zero-vector pair forced
+    onto the join path) — no declared query carries zero vectors
+    (tests pin it)."""
     id_type = embeddings.schema[id_col].dataType
     if isinstance(
         id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)

@@ -670,6 +670,7 @@ def q195(spark: SparkSession, sf: str) -> DataFrame:
 
 
 from .operators import merge as _mg
+from .operators import mining as _mn
 
 
 @query(
@@ -714,7 +715,7 @@ def q196(spark: SparkSession, sf: str) -> DataFrame:
     for r in rules:
         part = d.select((F.col("doc_id") % 40).alias("src"), (r % 40).alias("dst"))
         raw = part if raw is None else raw.unionAll(part)
-    tri = _mg.triangle_count(raw)
+    tri = _mn.triangle_count(raw, "src", "dst").select("n_triangles")
     deg = _mg.degree_stats(raw).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"), F.max("degree").alias("max_degree")
     )

@@ -469,23 +469,34 @@ def test_dedup_incremental_vs_batch(spark):
 
 
 def test_k_core_hand_and_reference(spark):
-    from riptable_spark.operators.merge import k_core
+    from riptable_spark.operators.dedup import k_core
+
+    def core(df, k, rounds):
+        # the surviving edge set and the degrees derived from it
+        es = {(r["u"], r["v"]) for r in
+              k_core(df, k, "src", "dst", max_rounds=rounds, return_edges=True).collect()}
+        deg = {}
+        for a, b in es:
+            deg[a] = deg.get(a, 0) + 1
+            deg[b] = deg.get(b, 0) + 1
+        return es, deg
 
     # triangle {0,1,2} with pendant 3-4 chain: 2-core = the triangle
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)], "src long, dst long"
     )
-    out = {r["node"]: r["degree"] for r in k_core(edges, 2).collect()}
-    assert out == {0: 2, 1: 2, 2: 2}
-    assert k_core(edges, 3).count() == 0
+    assert core(edges, 2, 3) == ({(0, 1), (1, 2), (0, 2)}, {0: 2, 1: 2, 2: 2})
+    assert core(edges, 3, 2) == (set(), {})
 
-    # random graph vs python peeling reference
+    # random graph vs python peeling reference, given the rounds the
+    # reference took plus one (the extra round must remove nothing)
     rng = np.random.default_rng(19)
     es = {(int(a), int(b)) for a, b in rng.integers(0, 40, (120, 2)) if a != b}
     es = {(min(a, b), max(a, b)) for a, b in es}
     df = spark.createDataFrame(sorted(es), "src long, dst long")
     for k in (2, 3, 4):
         cur = set(es)
+        n_rounds = 0
         while True:
             deg = {}
             for a, b in cur:
@@ -495,12 +506,12 @@ def test_k_core_hand_and_reference(spark):
             if not bad:
                 break
             cur = {(a, b) for a, b in cur if a not in bad and b not in bad}
+            n_rounds += 1
         expect = {}
         for a, b in cur:
             expect[a] = expect.get(a, 0) + 1
             expect[b] = expect.get(b, 0) + 1
-        got = {r["node"]: r["degree"] for r in k_core(df, k).collect()}
-        assert got == expect
+        assert core(df, k, n_rounds + 1) == (cur, expect)
 
 
 def test_greedy_cover_hand(spark):

@@ -339,7 +339,8 @@ def test_triangle_count_brute_force_parity(spark):
     graph; degree_stats column sums to 2·|E|."""
     from pyspark.sql import functions as F
 
-    from riptable_spark.operators.merge import degree_stats, triangle_count
+    from riptable_spark.operators.merge import degree_stats
+    from riptable_spark.operators.mining import triangle_count
 
     df = spark.range(0, 300).select(
         (F.xxhash64("id") % 20).alias("src"),
@@ -351,7 +352,8 @@ def test_triangle_count_brute_force_parity(spark):
         adj.setdefault(a, set()).add(b)
         adj.setdefault(b, set()).add(a)
     expected = sum(len(adj[a] & adj[b]) for a, b in edges) // 3
-    assert triangle_count(df).first().n_triangles == expected
+    got = triangle_count(df, "src", "dst").first()
+    assert (got.n_edges, got.n_triangles) == (len(edges), expected)
     assert expected > 0  # the random graph is dense enough to be non-trivial
     degs = degree_stats(df).collect()
     assert sum(r.degree for r in degs) == 2 * len(edges)

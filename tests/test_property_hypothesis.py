@@ -11,7 +11,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -500,21 +500,30 @@ EDGES = st.lists(
 )
 
 
-@given(edges=EDGES)
+@given(edges=EDGES, loop=st.booleans())
+@example(edges=[(i, i + 1) for i in range(59)], loop=True)
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_connected_components_matches_union_find(spark, edges):
-    """Pointer-jumping label propagation must equal a plain union-find
-    on arbitrary random graphs (the round-5 perf rewrite changed the
-    ROUND structure; the fixed point — min reachable id — must not
-    move)."""
-    from riptable_spark.operators.dedup import connected_components
+def test_connected_components_matches_union_find(spark, monkeypatch, edges, loop):
+    """connected_components must equal a plain union-find on arbitrary
+    random graphs, down both of its paths (the fixed point — min
+    reachable id — must not move). Every graph here is far below the
+    crossover, so ``loop=False`` runs the single-task union-find, and
+    ``loop=True`` drops the crossover to 0 to force the shuffle-join
+    pointer-jumping loop. The explicit 60-node chain needs several
+    pointer-jump rounds."""
+    from riptable_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_CC_SMALL_EDGES", 0 if loop else 500_000)
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
         return
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    got = {r["node"]: r["component"] for r in dedup.connected_components(df).collect()}
+    assert got == _union_find(edges)
 
+
+def _union_find(edges):
+    """Reference labels: each node's component is its min member."""
     parent: dict[int, int] = {}
 
     def find(x):
@@ -536,27 +545,30 @@ def test_connected_components_matches_union_find(spark, edges):
         m = min(members)
         for n in members:
             want[n] = m
-    assert got == want
+    return want
 
 
-@given(edges=EDGES)
+@given(edges=EDGES, loop=st.booleans())
+@example(edges=[(3, 1), (1, 2), (7, 8)], loop=True)
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_grouped_connected_components_isolated_per_group(spark, edges):
+def test_grouped_connected_components_isolated_per_group(spark, monkeypatch, edges, loop):
     """group_cols= must resolve each group's graph independently: running
-    the SAME graph under two group keys gives identical per-group labels,
-    and never lets labels leak across groups."""
-    from riptable_spark.operators.dedup import connected_components
+    the SAME graph under two group keys gives each group the reference
+    labels, and never lets labels leak across groups. ``loop`` picks the
+    path as in test_connected_components_matches_union_find."""
+    from riptable_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_CC_SMALL_EDGES", 0 if loop else 500_000)
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
         return
     rows = [("g1", a, b) for a, b in edges] + [("g2", a, b) for a, b in edges]
     df = spark.createDataFrame(rows, "grp string, id_a long, id_b long")
-    out = connected_components(df, group_cols=["grp"]).collect()
+    out = dedup.connected_components(df, group_cols=["grp"]).collect()
     by_grp: dict[str, dict] = {"g1": {}, "g2": {}}
     for r in out:
         by_grp[r["grp"]][r["node"]] = r["component"]
-    assert by_grp["g1"] == by_grp["g2"] and len(by_grp["g1"]) > 0
+    assert by_grp["g1"] == by_grp["g2"] == _union_find(edges)
 
 
 DOMAINS = st.lists(
